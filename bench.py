@@ -381,8 +381,11 @@ def _warmup(spark, qs, sf_dir: str):
     _lpa(toy, n_iter=3).write.format("noop").mode("overwrite").save()
 
 
-def _time_queries(spark, qs, names, sf_dir: str) -> dict:
-    times = {}
+def _time_queries(spark, qs, names, sf_dir: str) -> tuple[dict, dict]:
+    """→ (times, failed): per-query best-of-2 seconds, and for each
+    query that raised, "ExceptionClass: first message line". A broken
+    query is recorded and skipped; the batch keeps going."""
+    times, failed = {}, {}
     for name in names:
         fn = qs.get(name)
         if fn is None:
@@ -390,13 +393,19 @@ def _time_queries(spark, qs, names, sf_dir: str) -> dict:
         # best-of-2: this host's load varies run-to-run by ±25%; the min
         # is the reproducible steady-state signal
         best = None
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
+        try:
+            for _ in range(2):
+                t0 = time.time()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite") \
+                    .save()
+                dt = time.time() - t0
+                best = dt if best is None else min(best, dt)
+        except Exception as e:  # noqa: BLE001 — recorded, not fatal
+            first = (str(e).strip().splitlines() or [""])[0]
+            failed[name] = f"{type(e).__name__}: {first}"
+            continue
         times[name] = round(best, 3)
-    return times
+    return times, failed
 
 
 def _child_main():
@@ -409,14 +418,15 @@ def _child_main():
     qs = entry.queries()
     sf_dir, layout = _prepare_layout(spark, sf_dir)
     _warmup(spark, qs, sf_dir)
-    times = _time_queries(spark, qs, HEADLINE[start:end], sf_dir)
+    times, failed = _time_queries(spark, qs, HEADLINE[start:end], sf_dir)
     with open(os.environ["SPARK_GRAFT_BATCH_OUT"], "w") as f:
-        json.dump({"times": times, "layout": layout}, f)
+        json.dump({"times": times, "failed": failed, "layout": layout}, f)
 
 
-def _run_batched(batch_size: int,
-                 n_passes: int = 2) -> tuple[dict, list, dict | None]:
-    """Spawn one subprocess per HEADLINE batch; merge per-query times.
+def _run_batched(batch_size: int, n_passes: int = 2
+                 ) -> tuple[dict, dict, list, dict | None]:
+    """Spawn one subprocess per HEADLINE batch; merge per-query times
+    and failures (a query that failed in any pass is listed).
     Fresh JVM per batch keeps late queries out of the GC/codegen-cache
     shadow of the first hundred. Each batch runs ``n_passes`` times in
     adjacent fresh JVMs (interleaved A/B — r7 verdict #2): the
@@ -427,6 +437,7 @@ def _run_batched(batch_size: int,
     import tempfile
 
     times: dict = {}
+    failed: dict = {}
     pass_times: list[dict] = [{} for _ in range(n_passes)]
     layout = None
     for start in range(0, len(HEADLINE), batch_size):
@@ -441,12 +452,13 @@ def _run_batched(batch_size: int,
                 with open(tf.name) as f:
                     part = json.load(f)
             pass_times[p].update(part["times"])
+            failed.update(part["failed"])
             for name, dt in part["times"].items():
                 if name not in times or dt < times[name]:
                     times[name] = dt
             layout = layout or part["layout"]
     pass_totals = [round(sum(pt.values()), 3) for pt in pass_times]
-    return times, pass_totals, layout
+    return times, failed, pass_totals, layout
 
 
 def main():
@@ -465,7 +477,8 @@ def main():
     spark = None
     pass_totals: list = []
     if batch_size > 0:
-        times, pass_totals, layout = _run_batched(batch_size, n_passes)
+        times, failed, pass_totals, layout = _run_batched(batch_size,
+                                                          n_passes)
         if os.environ.get("SPARK_GRAFT_SPLIT", "1") != "0":
             sf_dir = f"/tmp/meza_bench_split_sf{sf}"
         qs = entry.queries()
@@ -474,7 +487,7 @@ def main():
         qs = entry.queries()
         sf_dir, layout = _prepare_layout(spark, sf_dir)
         _warmup(spark, qs, sf_dir)
-        times = _time_queries(spark, qs, HEADLINE, sf_dir)
+        times, failed = _time_queries(spark, qs, HEADLINE, sf_dir)
     cpu_after = _cpu_microbench()
     total = sum(times.values())
 
@@ -483,6 +496,8 @@ def main():
         "value": round(total, 3),
         "unit": "sec",
         "queries": times,
+        "n_failed": len(failed),
+        "failed": failed,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # drift self-adjudication (r7 verdict #2): flat cpu_sec with
         # agreeing pass totals = a clean record; flat cpu_sec with
@@ -517,10 +532,12 @@ def main():
         # as canonical, pass totals + spread recorded inline — a
         # single drifted sample can no longer masquerade as a
         # super-linear slope
-        s_passes = [_time_queries(spark, qs, SCALE_QUERIES, scale_dir)
-                    for _ in range(max(1, n_passes))]
+        s_runs = [_time_queries(spark, qs, SCALE_QUERIES, scale_dir)
+                  for _ in range(max(1, n_passes))]
+        s_passes = [t for t, _ in s_runs]
+        s_failed = {n: why for _, f in s_runs for n, why in f.items()}
         stimes = {n: min(p[n] for p in s_passes if n in p)
-                  for n in s_passes[0]}
+                  for n in SCALE_QUERIES if any(n in p for p in s_passes)}
         s_totals = [round(sum(p.values()), 3) for p in s_passes]
         # the 10x key-shifted replica of sf0.1 IS the sf1-scale dataset
         # (r2 verdict #8): generated once, persisted at scale_dir and
@@ -529,6 +546,8 @@ def main():
             "factor": SCALE_FACTOR, "gen_sec": gen_sec,
             "persisted_at": scale_dir,
             "queries": stimes,
+            "n_failed": len(s_failed),
+            "failed": s_failed,
             "total_sec": round(sum(stimes.values()), 3),
             "pass_totals_sec": s_totals,
             "pass_spread": (round(max(s_totals) / min(s_totals), 3)
@@ -548,6 +567,7 @@ def main():
     print(json.dumps({
         "metric": out["metric"], "value": out["value"], "unit": out["unit"],
         "sf": out["sf"], "n_queries": len(times),
+        "n_failed": len(failed),
         "cpu_sec": cpu_before,
         "pass_totals_sec": pass_totals or None,
         "fixed10_total_sec": out["calibration"]["fixed10_total_sec"],

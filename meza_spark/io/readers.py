@@ -113,18 +113,24 @@ def detect_encoding(path: str, sample_bytes: int = 1 << 16) -> str:
     Windows-1252 quirk handling at io.py:419-431)."""
     with open(path, "rb") as f:
         head = f.read(sample_bytes)
-    return _detect_bytes(head)
+    return _detect_bytes(head, sample_bytes)
 
 
-def _detect_bytes(head: bytes) -> str:
+def _detect_bytes(head: bytes, sample_bytes: int = 1 << 16) -> str:
     for bom, enc in _BOMS:
         if head.startswith(bom):
             return enc
     try:
         head.decode("utf-8")
         return "utf-8"
-    except UnicodeDecodeError:
-        pass
+    except UnicodeDecodeError as err:
+        # a head that filled its sample may stop inside a multi-byte
+        # character: up to 3 trailing bytes of an incomplete sequence
+        # are slack, as the leading ones are in _tail_clean
+        if len(head) >= sample_bytes and err.end == len(head) \
+                and err.start >= len(head) - 3 \
+                and err.reason == "unexpected end of data":
+            return "utf-8"
     try:
         import chardet  # type: ignore
 

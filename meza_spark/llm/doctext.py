@@ -1,6 +1,8 @@
 """Unified document-to-text dispatch — ONE operator a crawl/curation
 pipeline points at a mixed binary column, routing each payload to the
-right extraction tier by magic bytes (never by extension):
+right extraction tier by magic bytes (never by extension). The
+container rows (pdf/rtf/zip/gzip) route on the name
+:func:`meza_spark.llm.multimodal._sniff_format` gives:
 
 =============  ====================================================
 magic          route
@@ -109,23 +111,28 @@ def extract_document_bytes(b: bytes, _depth: int = 0) -> dict:
     Raises ValueError for non-document payloads (honest gate)."""
     if not b:
         raise ValueError("empty payload")
-    if b[:5] == b"%PDF-":
+    # late import: multimodal is a large module, and importing this one
+    # (as every meza_spark.llm import does) must not pay for it
+    from meza_spark.llm.multimodal import _sniff_format
+
+    fmt = _sniff_format(b)
+    if fmt == "pdf":
         from meza_spark.llm.pdf import extract_pdf_bytes
 
         r = extract_pdf_bytes(b)
         return {"format": "pdf", "text": r["text"],
                 "title": r["title"], "n_parts": r["n_pages"]}
-    if b[:5] == b"{\\rtf":
+    if fmt == "rtf":
         from meza_spark.llm.rtf import extract_rtf_bytes
 
         r = extract_rtf_bytes(b)
         return {"format": "rtf", "text": r["text"],
                 "title": r["title"], "n_parts": r["n_groups"]}
-    if b[:4] == b"PK\x03\x04":
+    if fmt == "zip":
         from meza_spark.llm.office import extract_office_bytes
 
         return extract_office_bytes(b)     # format/text/title/n_parts
-    if b[:2] == b"\x1f\x8b":
+    if fmt == "gzip":
         if _depth:
             raise ValueError("nested gzip payload — one layer only")
         return extract_document_bytes(_gunzip_capped(b), _depth + 1)

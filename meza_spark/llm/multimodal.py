@@ -10,9 +10,8 @@ palette, 4-pass interlace), baseline sequential AND progressive
 selection + successive approximation per T.81 §G, orthonormal-basis
 IDCT, 4:2:0 chroma upsample, YCbCr→RGB), and WAV 16/8-bit PCM sample
 stats. Only hierarchical/arithmetic JPEG stays behind an honest
-``NotImplementedError`` (or the opt-in deterministic stub used by
-the plumbing tests); a cluster that wants those adds a Pillow branch
-to ``decode_pixels`` and nothing else changes.
+``NotImplementedError``; a cluster that wants those adds a Pillow
+branch to ``decode_pixels`` and nothing else changes.
 
 Scale notes: binary payloads ride in Arrow record batches; keep
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` low (e.g. 64) for
@@ -23,14 +22,17 @@ fixed-width features, never the blobs.
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import operator
 import re
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
@@ -84,171 +86,135 @@ def media_schema(payload_col: str = "payload") -> StructType:
     ])
 
 
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+class _Predicate(NamedTuple):
+    """A magic test no (offset, prefix) pair can state: the Python
+    check on the payload bytes and its JVM twin on the binary column,
+    kept side by side so the two sniffers cannot drift."""
+    py: Callable[[bytes], bool]
+    jvm: Callable[[Column], Column]
+
+
+# the root element must open within the first 1 KiB: an XML prolog,
+# leading comment or SVG doctype alone is plain XML/HTML, 'unknown'
+_SVG_ROOT = _Predicate(
+    lambda b: b.find(b"<svg", 0, 1024) >= 0,
+    lambda p: F.contains(F.substring(p, 1, 1024), F.lit(b"<svg")))
+
+
+def _mpeg_sync_py(b: bytes) -> bool:
+    return len(b) >= 3 and (b[1] & 0xE0) == 0xE0 \
+        and (b[1] & 0x18) != 0x08 and (b[1] & 0x06) != 0 \
+        and (b[2] & 0xF0) != 0xF0 and (b[2] & 0x0C) != 0x0C
+
+
+def _mpeg_sync_jvm(p: Column) -> Column:
+    b1, b2 = (F.conv(F.hex(F.substring(p, i, 1)), 16, 10).cast("int")
+              for i in (2, 3))
+    return ((b1.bitwiseAND(0xE0) == 0xE0) & (b1.bitwiseAND(0x18) != 0x08)
+            & (b1.bitwiseAND(0x06) != 0) & (b2.bitwiseAND(0xF0) != 0xF0)
+            & (b2.bitwiseAND(0x0C) != 0x0C))
+
+
+# bare MPEG audio sync after a 0xFF lead byte: non-reserved version/
+# layer/bitrate/samplerate fields (the standard `file`-style validity
+# screen — a lone 0xFF byte is common junk, a fully valid frame
+# header is not)
+_MPEG_SYNC = _Predicate(_mpeg_sync_py, _mpeg_sync_jvm)
+
+
+def _at(offset: int, *magics: bytes) -> tuple:
+    """Byte test: the payload holds one of ``magics`` at ``offset``."""
+    return offset, magics
+
+
+# THE container sniff, first match wins: (format, tests that must all
+# hold). Both _sniff_format and attach_media_meta's JVM column are
+# built from this table, and every Python dispatcher routes on the
+# name it gives (the per-format parsers still check their own input).
+# Only the DuckDB replay twins in __spark_entry__ (_SNIFF_WHENS) are
+# written by hand; they need a branch only for the rows ASCII text can
+# hit — a magic whose lead byte cannot open ASCII text (PNG, ZIP,
+# EBML, ...) has none there. Weak zero-byte magics (ICO/CUR) and the
+# MPEG sync come after every byte-solid signature. WBMP has no honest
+# magic (two zero bytes also open MPEG-PS/ES and JP2), so it sniffs
+# 'unknown' and decode_pixels tries it as the last resort.
+_MAGIC = (
+    ("png", (_at(0, _PNG_SIG),)),
+    ("jpeg", (_at(0, b"\xff\xd8\xff"),)),
+    ("gif", (_at(0, b"GIF87a", b"GIF89a"),)),
+    ("bmp", (_at(0, b"BM"),)),
+    ("tiff", (_at(0, b"II*\x00", b"MM\x00*"),)),
+    ("wav", (_at(0, b"RIFF"), _at(8, b"WAVE"))),
+    ("avi", (_at(0, b"RIFF"), _at(8, b"AVI "))),
+    ("webp", (_at(0, b"RIFF"), _at(8, b"WEBP"))),
+    ("aiff", (_at(0, b"FORM"), _at(8, b"AIFF", b"AIFC"))),
+    ("au", (_at(0, b".snd"),)),
+    ("netpbm", (_at(0, b"P5", b"P6"),)),
+    ("pdf", (_at(0, b"%PDF-"),)),
+    ("rtf", (_at(0, b"{\\rtf"),)),
+    ("svg", (_at(0, b"<svg", b"<?xml", b"<!--", b"<!DOCTYPE svg"),
+             _SVG_ROOT)),
+    # ISO-BMFF split by major brand: AVIF/HEIC are the modern-crawl
+    # image containers; mif1/msf1 are brand-agnostic HEIF shells
+    ("avif", (_at(4, b"ftyp"), _at(8, b"avif", b"avis"))),
+    ("heic", (_at(4, b"ftyp"), _at(8, b"heic", b"heix", b"hevc", b"hevx"))),
+    ("heif", (_at(4, b"ftyp"), _at(8, b"mif1", b"msf1"))),
+    ("mp4", (_at(4, b"ftyp"),)),
+    ("flac", (_at(0, b"fLaC"),)),
+    ("mp3", (_at(0, b"ID3"),)),
+    ("ogg", (_at(0, b"OggS"),)),
+    # docx/pptx/odt/epub refinement is a member walk (office.py's
+    # sniff_zip_doc), not a magic
+    ("zip", (_at(0, b"PK\x03\x04"),)),
+    ("gzip", (_at(0, b"\x1f\x8b"),)),          # doctext gunzips + re-sniffs
+    # the mkv-vs-webm split is a header parse (DocType), not a sniff
+    ("ebml", (_at(0, b"\x1aE\xdf\xa3"),)),
+    ("ico", (_at(0, b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"),)),
+    ("mp3", (_at(0, b"\xff"), _MPEG_SYNC)),
+)
+_BMFF = ("avif", "heic", "heif", "mp4")
+
+
 def _sniff_format(b: bytes) -> str:
-    """Python twin of :func:`attach_media_meta`'s JVM sniff — keep
-    the two in LOCKSTEP (same containers, same precedence); wbmp is
-    intentionally absent from both (no honest magic)."""
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png"
-    if b[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        return "gif"
-    if b[:2] == b"BM":
-        return "bmp"
-    if b[:4] in (b"II*\x00", b"MM\x00*"):
-        return "tiff"
-    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        return "wav"
-    if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-        return "avi"
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        return "webp"
-    if b[:4] == b"FORM" and b[8:12] in (b"AIFF", b"AIFC"):
-        return "aiff"
-    if b[:4] == b".snd":
-        return "au"
-    if b[:2] in (b"P5", b"P6"):
-        return "netpbm"
-    if b[:5] == b"%PDF-":
-        return "pdf"
-    if b[:5] == b"{\\rtf":
-        return "rtf"
-    if b[:4] == b"<svg" or (
-            (b[:5] == b"<?xml" or b[:4] == b"<!--"
-             or b[:13] == b"<!DOCTYPE svg")
-            and b.find(b"<svg", 0, 1024) >= 0):
-        # bare <svg> root, or an XML prolog / leading comment /
-        # SVG doctype whose root element opens within the sniff
-        # window; plain XML and HTML stay 'unknown'
-        return "svg"
-    if b[4:8] == b"ftyp":
-        # ISO-BMFF family split by major brand (r8 verdict task #4):
-        # AVIF/HEIC are the modern-crawl image containers; mif1/msf1
-        # are brand-agnostic HEIF shells
-        brand = b[8:12]
-        if brand in (b"avif", b"avis"):
-            return "avif"
-        if brand in (b"heic", b"heix", b"hevc", b"hevx"):
-            return "heic"
-        if brand in (b"mif1", b"msf1"):
-            return "heif"
-        return "mp4"
-    if b[:4] == b"fLaC":
-        return "flac"
-    if b[:3] == b"ID3":
-        return "mp3"
-    if b[:4] == b"OggS":
-        return "ogg"
-    if b[:4] == b"PK\x03\x04":
-        return "zip"                 # docx/pptx/odt/epub refinement
-        #                              is a member walk (office.py's
-        #                              sniff_zip_doc), not a magic
-    if b[:2] == b"\x1f\x8b":
-        return "gzip"                # doctext.py gunzips + re-sniffs
-    if b[:4] == b"\x1aE\xdf\xa3":
-        return "ebml"                # mkv-vs-webm split is a header
-        #                              parse (DocType), not a sniff
-    if b[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
-        return "ico"
-    if len(b) >= 3 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0 \
-            and (b[1] & 0x18) != 0x08 and (b[1] & 0x06) != 0 \
-            and (b[2] & 0xF0) != 0xF0 and (b[2] & 0x0C) != 0x0C:
-        # bare MPEG audio sync: 11 set bits plus non-reserved
-        # version/layer/bitrate/samplerate fields (the standard
-        # `file`-style validity screen — a lone 0xFF byte is common
-        # junk, a fully valid frame header is not)
-        return "mp3"
+    """Container format of ``b`` by the first :data:`_MAGIC` row whose
+    tests all hold, else 'unknown'."""
+    for name, tests in _MAGIC:
+        for t in tests:
+            if not (t.py(b) if isinstance(t, _Predicate)
+                    else b.startswith(t[1], t[0])):
+                break
+        else:
+            return name
     return "unknown"
 
 
 def attach_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Sniff container format + size from magic bytes — pure JVM-side
-    expressions over the binary column (substring/length work on
-    binary), no decode. Covers every container the decode tier
-    handles (RIFF disambiguates WAV vs AVI by the form type at
-    offset 8; ICO/CUR/WBMP have only weak zero-byte magics, checked
-    after every real signature, mirroring decode_pixels)."""
+    expressions over the binary column (substring/hex work on binary),
+    no decode. ``format`` is :data:`_MAGIC` folded into one CASE on
+    exact bytes, so it agrees with :func:`_sniff_format` row for
+    row."""
     p = F.col(payload_col)
-    s4 = F.substring(p, 1, 4).cast("string")
-    form8 = F.substring(p, 9, 4).cast("string")
-    # bytes 2 and 3 as ints for the MPEG-sync bit tests (codegen'd)
-    _b2 = F.conv(F.hex(F.substring(p, 2, 1)), 16, 10).cast("int")
-    _b3 = F.conv(F.hex(F.substring(p, 3, 1)), 16, 10).cast("int")
-    fmt = (F.when(F.hex(F.substring(p, 1, 4)) == "89504E47", "png")
-            .when(F.hex(F.substring(p, 1, 3)) == "FFD8FF", "jpeg")
-            .when(F.substring(p, 1, 6).cast("string")
-                  .isin("GIF87a", "GIF89a"), "gif")
-            .when(F.substring(p, 1, 2).cast("string") == "BM", "bmp")
-            .when(F.hex(F.substring(p, 1, 4))
-                  .isin("49492A00", "4D4D002A"), "tiff")
-            .when((s4 == "RIFF") & (form8 == "WAVE"), "wav")
-            .when((s4 == "RIFF") & (form8 == "AVI "), "avi")
-            .when((s4 == "RIFF") & (form8 == "WEBP"), "webp")
-            .when((s4 == "FORM") & form8.isin("AIFF", "AIFC"), "aiff")
-            .when(s4 == ".snd", "au")
-            .when(F.substring(p, 1, 2).cast("string")
-                  .isin("P5", "P6"), "netpbm")
-            .when(F.substring(p, 1, 5).cast("string") == "%PDF-", "pdf")
-            .when(F.substring(p, 1, 5).cast("string") == "{\\rtf", "rtf")
-            # SVG: bare <svg> root, or XML prolog / leading comment /
-            # SVG doctype + <svg within the first 1 KiB (mirrors the
-            # Python sniff window exactly)
-            .when((F.substring(p, 1, 4).cast("string") == "<svg")
-                  | (((F.substring(p, 1, 5).cast("string") == "<?xml")
-                      | (F.substring(p, 1, 4).cast("string") == "<!--")
-                      | (F.substring(p, 1, 13).cast("string")
-                         == "<!DOCTYPE svg"))
-                     & (F.instr(F.substring(p, 1, 1024).cast("string"),
-                                "<svg") > 0)), "svg")
-            # ISO-BMFF brand split (lockstep with _sniff_format)
-            .when((F.substring(p, 5, 4).cast("string") == "ftyp")
-                  & F.substring(p, 9, 4).cast("string")
-                     .isin("avif", "avis"), "avif")
-            .when((F.substring(p, 5, 4).cast("string") == "ftyp")
-                  & F.substring(p, 9, 4).cast("string")
-                     .isin("heic", "heix", "hevc", "hevx"), "heic")
-            .when((F.substring(p, 5, 4).cast("string") == "ftyp")
-                  & F.substring(p, 9, 4).cast("string")
-                     .isin("mif1", "msf1"), "heif")
-            .when(F.substring(p, 5, 4).cast("string") == "ftyp", "mp4")
-            .when(F.substring(p, 1, 4).cast("string") == "fLaC", "flac")
-            .when(F.substring(p, 1, 3).cast("string") == "ID3", "mp3")
-            .when(F.substring(p, 1, 4).cast("string") == "OggS", "ogg")
-            # ZIP local-file magic (docx/pptx/odt/epub live inside;
-            # the flavor split is a member walk — office.py — not a
-            # sniff). chr(3)/chr(4) can't open ASCII text, so the
-            # replaying DuckDB twins need no branch (same
-            # char-vs-byte caveat as EBML at multimodal_meta).
-            .when(F.hex(F.substring(p, 1, 4)) == "504B0304", "zip")
-            # gzip: 0x1F can't open ASCII text — no twin branch needed
-            .when(F.hex(F.substring(p, 1, 2)) == "1F8B", "gzip")
-            # EBML (Matroska/WebM): the JVM side reports the container
-            # family; the finer mkv-vs-webm DocType split needs the
-            # Python-side EBML walk (_sniff_ebml). 0x1A can't open
-            # ASCII text, so the ASCII-corpus twins need no branch
-            # (documented char-vs-byte caveat at multimodal_meta).
-            .when(F.hex(F.substring(p, 1, 4)) == "1A45DFA3", "ebml")
-            .when(F.hex(F.substring(p, 1, 4))
-                  .isin("00000100", "00000200"), "ico")
-            # bare MPEG sync (placed after every byte-solid magic,
-            # mirroring the Python sniff): byte1 == FF plus
-            # non-reserved version/layer/bitrate/samplerate bits —
-            # 0xFF can never open valid UTF-8 text, so the replaying
-            # DuckDB twin needs no branch for this arm
-            .when((F.hex(F.substring(p, 1, 1)) == "FF")
-                  & (_b2.bitwiseAND(F.lit(0xE0)) == 0xE0)
-                  & (_b2.bitwiseAND(F.lit(0x18)) != 0x08)
-                  & (_b2.bitwiseAND(F.lit(0x06)) != 0)
-                  & (_b3.bitwiseAND(F.lit(0xF0)) != 0xF0)
-                  & (_b3.bitwiseAND(F.lit(0x0C)) != 0x0C), "mp3")
-            # NO wbmp branch: its two-zero-byte "magic" also prefixes
-            # MPEG-PS/ES and JP2 — a sniffer must stay honest and
-            # return 'unknown'; decode_pixels still accepts WBMP when
-            # the caller routes it explicitly (dispatch of last
-            # resort there, after every real signature)
-            .otherwise("unknown"))
-    return df.withColumn("format", fmt) \
+
+    def holds(t):
+        if isinstance(t, _Predicate):
+            return t.jvm(p)
+        off, magics = t
+        by_len = {}
+        for m in magics:
+            by_len.setdefault(len(m), []).append(m.hex().upper())
+        return functools.reduce(operator.or_, (
+            F.hex(F.substring(p, off + 1, n)).isin(*hexes)
+            for n, hexes in by_len.items()))
+
+    fmt = F                     # F.when opens the CASE, Column.when extends it
+    for name, tests in _MAGIC:
+        fmt = fmt.when(functools.reduce(operator.and_, map(holds, tests)),
+                       name)
+    return df.withColumn("format", fmt.otherwise("unknown")) \
              .withColumn("n_bytes", F.length(p)) \
              .withColumn("payload_sha", F.sha2(p, 256))
 
@@ -556,7 +522,7 @@ def _decode_ico(b: bytes):
     if best is None:
         raise ValueError("ICO has no decodable entries")
     _, w, h, payload = best
-    if payload[:8] == _PNG_SIG:
+    if _sniff_format(payload) == "png":
         return _decode_png(payload)
     if len(payload) < 40:
         raise ValueError("truncated ICO DIB")
@@ -696,7 +662,6 @@ def _png_paeth(a: int, b: int, c: int) -> int:
     return c
 
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
@@ -720,7 +685,7 @@ def _decode_png(b: bytes):
         return _decode_png_inner(b)
     except (zlib.error, struct.error, IndexError) as e:
         # malformed payloads must surface as ValueError so the
-        # unsupported='skip'/'stub' pipelines treat them like any
+        # unsupported='skip' pipelines treat them like any
         # other corrupt image instead of crashing the job
         raise ValueError(f"corrupt PNG payload: {e}") from e
 
@@ -1076,7 +1041,7 @@ def _decode_gif(b: bytes):
         return _decode_gif_inner(b)
     except (struct.error, IndexError) as e:
         # malformed payloads must surface as ValueError so the
-        # unsupported='skip'/'stub' pipelines treat them like any
+        # unsupported='skip' pipelines treat them like any
         # other corrupt image instead of crashing the job
         raise ValueError(f"corrupt GIF payload: {e}") from e
 
@@ -2301,7 +2266,7 @@ def _decode_jpeg(b: bytes):
         return _decode_jpeg_inner(b)
     except (struct.error, IndexError) as e:
         # malformed payloads must surface as ValueError so the
-        # unsupported='skip'/'stub' pipelines treat them like any
+        # unsupported='skip' pipelines treat them like any
         # other corrupt image instead of crashing the job
         raise ValueError(f"corrupt JPEG payload: {e}") from e
 
@@ -3459,8 +3424,20 @@ def _pillow_decode(b: bytes):
     return arr.copy()
 
 
+def _decode_webp(b: bytes):
+    from meza_spark.llm.webp import decode_webp
+    return decode_webp(b)            # VP8L real; lossy VP8 gated
+
+
+_PIXEL_DECODERS = {"bmp": _decode_bmp, "netpbm": _decode_netpbm,
+                   "png": _decode_png, "gif": _decode_gif,
+                   "jpeg": _decode_jpeg, "tiff": _decode_tiff,
+                   "webp": _decode_webp, "ico": _decode_ico}
+
+
 def decode_pixels(b: bytes):
-    """Dispatch real pixel decode by magic bytes → (h, w, c) uint8.
+    """Dispatch real pixel decode by the sniffed format → (h, w, c)
+    uint8.
 
     BMP (full DIB matrix: 24/32-bit, 16-bit 555/bitfields, 1/4/8-bit
     palette, RLE8 and RLE4) / PPM / PGM / PNG (all 5 filters, Adam7,
@@ -3479,34 +3456,19 @@ def decode_pixels(b: bytes):
     raises ``NotImplementedError``; unknown payloads raise
     ``ValueError``.
     """
-    lossless = (b[:2] == b"BM" or b[:8] == _PNG_SIG
-                or b[:4] in (b"II*\x00", b"MM\x00*"))
-    if lossless and _pillow():
+    fmt = _sniff_format(b)
+    if fmt in ("bmp", "png", "tiff") and _pillow():
         try:
             return _pillow_decode(b)
         except Exception:
             pass          # any Pillow hiccup → authoritative stdlib
             #               path (which also re-raises budget errors)
-    if b[:2] == b"BM":
-        return _decode_bmp(b)
-    if b[:2] in (b"P5", b"P6"):
-        return _decode_netpbm(b)
-    if b[:8] == _PNG_SIG:
-        return _decode_png(b)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        return _decode_gif(b)
-    if b[:3] == b"\xff\xd8\xff":
-        return _decode_jpeg(b)
-    if b[:4] in (b"II*\x00", b"MM\x00*"):
-        return _decode_tiff(b)
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        from meza_spark.llm.webp import decode_webp
-        return decode_webp(b)            # VP8L real; lossy VP8 gated
-    if b[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
-        return _decode_ico(b)            # ICO / CUR directory
-    if b[:2] == b"\x00\x00":
-        # WBMP type 0 has no magic beyond the two zero bytes; checked
-        # LAST so every real signature wins, and bad dims still raise
+    if fmt in _PIXEL_DECODERS:
+        return _PIXEL_DECODERS[fmt](b)
+    if fmt == "unknown" and b[:2] == b"\x00\x00":
+        # WBMP type 0 has no magic beyond the two zero bytes: the
+        # route of last resort, so every real signature wins, and bad
+        # dims still raise
         return _decode_wbmp(b)
     raise ValueError("unknown image container")
 
@@ -4066,42 +4028,24 @@ def _decode_au(b: bytes) -> dict:
 
 
 def _decode_audio_bytes(b: bytes) -> dict:
-    """Dispatch audio stat decode by magic bytes: RIFF/WAVE,
-    FORM/AIFF(-C), Sun .au."""
-    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+    """Dispatch audio stat decode by the sniffed format: WAV,
+    AIFF(-C), Sun .au, FLAC."""
+    fmt = _sniff_format(b)
+    if fmt == "wav":
         return _decode_wav(b)
-    if b[:4] == b"FORM" and b[8:12] in (b"AIFF", b"AIFC"):
+    if fmt == "aiff":
         return _decode_aiff(b)
-    if b[:4] == b".snd":
+    if fmt == "au":
         return _decode_au(b)
-    if b[:4] == b"fLaC":
+    if fmt == "flac":
         from meza_spark.llm.flac import decode_flac
         return decode_flac(b)        # full decode, CRC+MD5 verified
-    sniffed = _sniff_format(b)
-    if sniffed in ("mp3", "ogg"):
+    if fmt in ("mp3", "ogg"):
         raise NotImplementedError(
-            f"{sniffed} carries perceptual codecs outside the "
+            f"{fmt} carries perceptual codecs outside the "
             "pure-stdlib charter (headers/duration parse via "
             "parse_media_headers); route to a decoder= plugin")
     raise ValueError("unknown audio container (WAV/AIFF/.au/FLAC)")
-
-
-def _decode_image_stub(payload: bytes) -> dict:
-    """Deterministic fake decode. A real deployment replaces this with
-    Pillow/libvips; the surrounding Spark plumbing is identical.
-
-    Produces stable pseudo-pixel statistics derived from the payload
-    bytes so tests can assert exact values.
-    """
-    if payload is None:
-        raise NotImplementedError("real image decode requires Pillow; "
-                                  "null payload has nothing to fake")
-    h = hashlib.sha256(payload).digest()
-    width = 16 + h[0] % 64
-    height = 16 + h[1] % 64
-    mean_px = sum(payload[:256]) / max(1, min(len(payload), 256))
-    return {"width": width, "height": height, "mean_pixel": mean_px,
-            "crc": zlib.crc32(payload)}
 
 
 def decode_image(df: DataFrame, payload_col: str = "payload",
@@ -4114,9 +4058,8 @@ def decode_image(df: DataFrame, payload_col: str = "payload",
     JPEG (see :func:`decode_pixels`): width/height/channels from the
     actual pixel array, ``mean_pixel`` the true mean over every sample
     byte, ``crc`` of the payload. Undecodable payloads follow
-    ``unsupported``: ``'error'`` (default — honest gate), ``'skip'``
-    (drop the row; a curation pipeline's usual choice), or ``'stub'``
-    (deterministic fake stats — plumbing tests only).
+    ``unsupported``: ``'error'`` (default — honest gate) or ``'skip'``
+    (drop the row; a curation pipeline's usual choice).
     """
     out_schema = StructType([
         StructField(id_col, LongType()),
@@ -4138,11 +4081,6 @@ def decode_image(df: DataFrame, payload_col: str = "payload",
                     px = decode_pixels(b)
                 except (NotImplementedError, ValueError):
                     if unsupported == "skip":
-                        continue
-                    if unsupported == "stub":
-                        d = _decode_image_stub(b)
-                        rows.append((mid, d["width"], d["height"], None,
-                                     d["mean_pixel"], d["crc"]))
                         continue
                     raise
                 rows.append((mid, int(px.shape[1]), int(px.shape[0]),
@@ -4207,20 +4145,21 @@ def decode_audio(df: DataFrame, payload_col: str = "payload",
 
 
 def _video_frames_bytes(b: bytes):
-    """Dispatch full-frame video decode by magic bytes → ``(frames,
+    """Dispatch full-frame video decode by the sniffed format → ``(frames,
     start_timestamps_ms)``: animated GIF, APNG (delay lists become
     cumulative start times), animated WebP (VP8L frames), MJPEG AVI,
     MJPEG MP4."""
-    if b[:6] in (b"GIF87a", b"GIF89a"):
+    fmt = _sniff_format(b)
+    if fmt == "gif":
         frames, delays = _decode_gif_frames(b)
-    elif b[:8] == _PNG_SIG:
+    elif fmt == "png":
         frames, delays = _decode_apng_frames(b)
-    elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
+    elif fmt == "avi":
         return _decode_avi_frames(b)
-    elif b[:4] == b"RIFF" and b[8:12] == b"WEBP":
+    elif fmt == "webp":
         from meza_spark.llm.webp import decode_webp_frames
         return decode_webp_frames(b)
-    elif b[4:8] == b"ftyp":
+    elif fmt in _BMFF:
         return _decode_mp4_frames(b)
     else:
         raise ValueError("not a frame-decodable video container "
@@ -4706,8 +4645,9 @@ def _parse_headers(b: bytes) -> dict:
     Pillow: PNG IHDR, JPEG SOF marker walk, GIF logical screen
     descriptor, BMP info header, TIFF first-IFD dims, WAV RIFF
     fmt/data chunks, MP4 box walk, MP3 frame walk (exact VBR-safe
-    duration), FLAC STREAMINFO. Returns whatever the container
-    declares; unknown formats → format only.
+    duration), FLAC STREAMINFO. ``format`` is the sniffed name
+    (:data:`_MAGIC`; ebml refines to mkv/webm); the other fields are
+    whatever the container declares.
 
     This is the filter-stage metadata a pipeline needs (drop tiny
     images, cap durations) without touching pixel/sample data.
@@ -4717,12 +4657,12 @@ def _parse_headers(b: bytes) -> dict:
            "orientation": None}
     if len(b) < 12:
         return out
-    if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 24:
-        out["format"] = "png"
-        w, h = struct.unpack(">II", b[16:24])
-        out["width"], out["height"] = int(w), int(h)
-    elif b[:3] == b"\xff\xd8\xff":
-        out["format"] = "jpeg"
+    fmt = out["format"] = _sniff_format(b)
+    if fmt == "png":
+        if len(b) >= 24:
+            w, h = struct.unpack(">II", b[16:24])
+            out["width"], out["height"] = int(w), int(h)
+    elif fmt == "jpeg":
         i = 2
         while i + 9 < len(b):
             if b[i] != 0xFF:
@@ -4747,19 +4687,17 @@ def _parse_headers(b: bytes) -> dict:
                 out["channels"] = b[i + 9] if i + 9 < len(b) else None
                 break
             i += 2 + seglen
-    elif b[:6] in (b"GIF87a", b"GIF89a"):
-        out["format"] = "gif"
+    elif fmt == "gif":
         w, h = struct.unpack("<HH", b[6:10])
         out["width"], out["height"] = int(w), int(h)
-    elif b[:2] == b"BM" and len(b) >= 26:
-        out["format"] = "bmp"
-        if struct.unpack("<I", b[14:18])[0] == 12:   # OS/2 core header
-            w, h = struct.unpack("<HH", b[18:22])
-        else:
-            w, h = struct.unpack("<ii", b[18:26])
-        out["width"], out["height"] = int(w), abs(int(h))
-    elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-        out["format"] = "avi"
+    elif fmt == "bmp":
+        if len(b) >= 26:
+            if struct.unpack("<I", b[14:18])[0] == 12:   # OS/2 core
+                w, h = struct.unpack("<HH", b[18:22])
+            else:
+                w, h = struct.unpack("<ii", b[18:26])
+            out["width"], out["height"] = int(w), abs(int(h))
+    elif fmt == "avi":
         try:
             for cid, s, e in _riff_chunks(b, 12, len(b)):
                 if cid == b"LIST" and b[s:s + 4] == b"hdrl":
@@ -4775,11 +4713,10 @@ def _parse_headers(b: bytes) -> dict:
                     break
         except (ValueError, struct.error, IndexError):
             pass                       # header-only parse stays lenient
-    elif b[:4] == b"RIFF" and b[8:12] == b"WEBP":
+    elif fmt == "webp":
         from meza_spark.llm.webp import webp_headers
         out.update(webp_headers(b))
-    elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        out["format"] = "wav"
+    elif fmt == "wav":
         pos, byte_rate, data_sz = 12, None, None
         while pos + 8 <= len(b):
             cid = b[pos:pos + 4]
@@ -4795,8 +4732,7 @@ def _parse_headers(b: bytes) -> dict:
             pos += 8 + sz + (sz & 1)  # chunks are word-aligned
         if byte_rate and data_sz is not None:
             out["duration_ms"] = int(data_sz * 1000 // byte_rate)
-    elif b[:4] == b"FORM" and b[8:12] in (b"AIFF", b"AIFC"):
-        out["format"] = "aiff"
+    elif fmt == "aiff":
         try:
             pos = 12
             while pos + 8 <= len(b):
@@ -4814,9 +4750,8 @@ def _parse_headers(b: bytes) -> dict:
                 pos += 8 + sz + (sz & 1)
         except (ValueError, struct.error, IndexError):
             pass                       # header-only parse stays lenient
-    elif b[:4] == b".snd" and len(b) >= 24:
-        out["format"] = "au"
-        try:
+    elif fmt == "au":
+        try:                           # struct.error guards len < 24
             off, size, enc, rate, ch = struct.unpack(">IIIII", b[4:24])
             out["channels"] = ch
             bps = {1: 1, 27: 1, 2: 1, 3: 2, 6: 4}.get(enc)
@@ -4827,8 +4762,7 @@ def _parse_headers(b: bytes) -> dict:
                         size // (bps * ch) * 1000 // rate)
         except struct.error:
             pass
-    elif b[:4] in (b"II*\x00", b"MM\x00*"):
-        out["format"] = "tiff"
+    elif fmt == "tiff":
         try:
             en = "<" if b[:2] == b"II" else ">"
             off = struct.unpack(en + "I", b[4:8])[0]
@@ -4843,45 +4777,38 @@ def _parse_headers(b: bytes) -> dict:
                     out["width" if tag == 256 else "height"] = int(v)
         except (struct.error, IndexError):
             pass                       # header-only parse stays lenient
-    elif b[4:8] == b"ftyp":
-        out["format"] = _sniff_format(b)   # mp4 / avif / heic / heif
-        if out["format"] == "mp4":
-            out.update({k: v for k, v in _parse_mp4(b).items()
-                        if v is not None})
-        else:
-            try:
-                _heif_headers(b, out)
-            except (ValueError, struct.error, IndexError):
-                pass                       # header-only parse stays lenient
-    elif b[:5] == b"%PDF-":
+    elif fmt == "mp4":
+        out.update({k: v for k, v in _parse_mp4(b).items()
+                    if v is not None})
+    elif fmt in _BMFF:
+        try:
+            _heif_headers(b, out)
+        except (ValueError, struct.error, IndexError):
+            pass                       # header-only parse stays lenient
+    elif fmt == "pdf":
         from meza_spark.llm.pdf import pdf_headers
         out.update(pdf_headers(b))
-    elif _sniff_format(b) == "svg":
-        out["format"] = "svg"
+    elif fmt == "svg":
         try:
             _svg_headers(b, out)
         except (ValueError, IndexError):
             pass                           # header-only parse stays lenient
-    elif b[:4] == b"fLaC":
-        out["format"] = "flac"
+    elif fmt == "flac":
         try:
             _flac_headers(b, out)
         except (ValueError, IndexError):
             pass                       # header-only parse stays lenient
-    elif b[:4] == b"OggS":
-        out["format"] = "ogg"
+    elif fmt == "ogg":
         try:
             _ogg_headers(b, out)
         except (ValueError, IndexError):
             pass                       # header-only parse stays lenient
-    elif b[:4] == b"\x1aE\xdf\xa3":
-        out["format"] = "ebml"
+    elif fmt == "ebml":
         try:
             _ebml_headers(b, out)      # refine to mkv/webm by DocType
         except (ValueError, IndexError):
             pass                       # header-only parse stays lenient
-    elif _sniff_format(b) == "mp3":
-        out["format"] = "mp3"
+    elif fmt == "mp3":
         try:
             _mp3_headers(b, out)
         except (ValueError, IndexError):
@@ -5038,7 +4965,7 @@ def _parse_mp4(b: bytes) -> dict:
 def parse_media_headers(df: DataFrame, payload_col: str = "payload",
                         id_col: str = "media_id") -> DataFrame:
     """Container-header metadata for every payload via Arrow-batched
-    ``mapInPandas`` — the real (non-stub) sibling of ``decode_image``:
+    ``mapInPandas`` — the header-only sibling of ``decode_image``:
     width/height/channels for PNG/JPEG/GIF/BMP, sample rate/channels/
     duration for WAV, format sniff for MP4. One pass, no shuffle;
     only headers are touched, so throughput is I/O-bound on the blob

@@ -96,6 +96,22 @@ def test_csv_encodings(spark, tmp_path, enc):
     assert rows == [("1", "2", "3"), ("4", "5", "©")]
 
 
+def test_detect_encoding_head_cut_inside_a_utf8_character(spark, tmp_path):
+    # the 64 KiB head sample ends after the first byte of 'é': the
+    # incomplete trailing sequence must not demote the file to 1252
+    p = str(tmp_path / "cut.csv")
+    with open(p, "wb") as f:
+        f.write(b"a" * 65535 + "é,1\n".encode() * 3)
+    assert mio.detect_encoding(p) == "utf-8"
+    rows = mio.read_csv(spark, p, has_header=False).collect()
+    assert [tuple(r)[1:] for r in rows[1:]] == [("1",), ("1",)]
+    assert rows[1][0] == "é"
+    # a real invalid byte near the end of the sample still falls back
+    with open(p, "wb") as f:
+        f.write(b"a" * 65534 + b"\xe9,1\n")
+    assert mio.detect_encoding(p) == "windows-1252"
+
+
 def test_csv_header_hygiene(spark, tmp_path):
     # dupe headers (FIXTURES §8) + sanitize
     p = _write(tmp_path, "d.csv", "Some Col,Some Col,\n1,2,3\n")

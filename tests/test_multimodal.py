@@ -29,15 +29,6 @@ def test_attach_media_meta_jvm_side(spark, media):
     assert "Python" not in plan
 
 
-def test_decode_image_deterministic(spark, media):
-    # unknown payloads: 'stub' keeps the legacy deterministic fake
-    a = {r["media_id"]: r["crc"]
-         for r in decode_image(media, unsupported="stub").collect()}
-    b = {r["media_id"]: r["crc"]
-         for r in decode_image(media, unsupported="stub").collect()}
-    assert a == b and len(a) == 6
-
-
 def test_decode_image_unsupported_modes(spark, media):
     import pytest as _pytest
 
@@ -3002,13 +2993,17 @@ def test_pillow_dispatch_and_fallback_without_pillow(monkeypatch):
     monkeypatch.setattr(mm, "_PILLOW", None)
 
 
-def test_sniffer_lockstep_over_every_container(spark):
-    """The LOCKSTEP invariant _sniff_format's docstring promises,
-    enforced over REAL payloads of every container the fuzz corpus
-    builds (r8): the Python sniff and the JVM codegen CASE must
-    agree byte-for-byte on format — including the honest 'unknown's
-    (wbmp) and the family-level 'ebml'."""
-    from meza_spark.llm.multimodal import _sniff_format, attach_media_meta
+def test_sniffer_lockstep_over_every_container(spark, monkeypatch):
+    """Both sniffers are built from the one _MAGIC table; enforced
+    over REAL payloads of every container the fuzz corpus builds:
+    the Python sniff and the JVM codegen CASE must agree
+    byte-for-byte on format — including the honest 'unknown's (wbmp)
+    and the family-level 'ebml'. Every dispatcher routes on that
+    name: parse_media_headers reports it, and document_text takes
+    its pdf/rtf/office/gzip routes exactly when the sniff says so."""
+    from meza_spark.llm import doctext
+    from meza_spark.llm.multimodal import (_parse_headers, _sniff_format,
+                                           attach_media_meta)
     from tests.test_properties import _media_fixtures
 
     payloads = {name: payload
@@ -3037,12 +3032,51 @@ def test_sniffer_lockstep_over_every_container(spark):
     import gzip as _gz
     payloads["gzip"] = _gz.compress(b"gzipped text", mtime=0)
     payloads["short"] = b"\xff\xfb"        # sub-3-byte: both unknown
+    # half a PNG signature is not a PNG (the JVM side once tested 4
+    # of the 8 bytes)
+    payloads["png_prefix4"] = b"\x89PNG" + b"\x00" * 12
+    # the root search is on bytes: a lead byte of a multi-byte UTF-8
+    # sequence must not hide the '<svg' right after it
+    payloads["svg_after_high_byte"] = b"<?xml \xf0<svg/>" + b" " * 8
     rows = [(i, bytearray(p))
             for i, p in enumerate(payloads.values())]
     df = spark.createDataFrame(rows, "id long, payload binary")
     jvm = {r["id"]: r["format"] for r in attach_media_meta(df).collect()}
     for i, (name, p) in enumerate(payloads.items()):
         assert _sniff_format(bytes(p)) == jvm[i], name
+    assert jvm[list(payloads).index("png_prefix4")] == "unknown"
+    assert jvm[list(payloads).index("svg_after_high_byte")] == "svg"
+
+    for name, p in payloads.items():
+        sniffed = _sniff_format(bytes(p))
+        parsed = _parse_headers(bytes(p))["format"]
+        assert parsed == sniffed or (sniffed, parsed) in (
+            ("ebml", "mkv"), ("ebml", "webm")), name
+
+    class Routed(Exception):
+        pass
+
+    def route(fmt):
+        def taken(*_args, **_kw):
+            raise Routed(fmt)
+        return taken
+
+    routes = {"pdf": "meza_spark.llm.pdf.extract_pdf_bytes",
+              "rtf": "meza_spark.llm.rtf.extract_rtf_bytes",
+              "zip": "meza_spark.llm.office.extract_office_bytes",
+              "gzip": "meza_spark.llm.doctext._gunzip_capped"}
+    for fmt, target in routes.items():
+        monkeypatch.setattr(target, route(fmt))
+    for name, p in payloads.items():
+        try:
+            doctext.extract_document_bytes(bytes(p))
+            took = None
+        except Routed as r:
+            took = r.args[0]
+        except ValueError:               # not a document: no route
+            took = None
+        sniffed = _sniff_format(bytes(p))
+        assert took == (sniffed if sniffed in routes else None), name
 
 
 def test_media_sniff_twin_parity_on_adversarial_prefixes(spark, tmp_path):
